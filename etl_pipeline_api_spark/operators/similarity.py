@@ -319,6 +319,16 @@ def cosine_pairs_blocked(
     )
 
 
+def _matrix_rows(index, ids) -> np.ndarray:
+    """Row positions of ``ids`` in the unique ``index``. ``get_indexer``
+    marks a missing id with -1, which would silently gather the last
+    row: raise instead."""
+    rows = index.get_indexer(ids)
+    if (rows < 0).any():
+        raise KeyError(f"ids not in the corpus: {ids[rows < 0][:5].tolist()}")
+    return rows
+
+
 def cosine_pairs_lsh(
     df: DataFrame,
     id_col: str,
@@ -461,24 +471,28 @@ def cosine_pairs_lsh(
     # same summation order (BLAS matmul there): a pair straddling the
     # threshold within an ulp can land in one set and not the other; the
     # op-dedup-embedding-lsh precision gate tolerates exactly that band.
+    import pandas as pd
+
     pdf_side = side.toPandas()
-    ids_np = pdf_side["id"].to_numpy()
+    if pdf_side.empty:
+        # empty corpus with an explicit dim -> no pairs (schema-correct)
+        return _empty_result(df, "id_a {id}, id_b {id}, cos double", [id_col])
+    idx = pd.Index(pdf_side["id"].to_numpy())
+    if not idx.is_unique:
+        raise ValueError(f"cosine_pairs_lsh: duplicate ids in {id_col!r}")
     mat = np.stack(pdf_side["v"].to_numpy()).astype(np.float64)
     norms = np.linalg.norm(mat, axis=1, keepdims=True)
     norms[norms == 0] = 1.0  # zero-only clamp (see cosine_pairs)
     mat /= norms
     sc = df.sparkSession.sparkContext
-    b_ids = sc.broadcast(ids_np)
+    b_idx = sc.broadcast(idx)
     b_mat = sc.broadcast(mat)
 
     @pandas_udf("double")
     def _cos_pair(ia, ib):
-        import pandas as pd
-
-        idx = pd.Index(b_ids.value)
         U = b_mat.value
-        A = U[idx.get_indexer(ia)]
-        B = U[idx.get_indexer(ib)]
+        A = U[_matrix_rows(b_idx.value, ia)]
+        B = U[_matrix_rows(b_idx.value, ib)]
         return pd.Series((A * B).sum(axis=1))
 
     return (

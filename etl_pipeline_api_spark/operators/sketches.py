@@ -48,6 +48,13 @@ def _bucket_from_hex(hx, j: int, width: int):
     return (b % width).cast("int")
 
 
+def _check_depth(depth: int) -> None:
+    """Row j reads hex digits 4j..4j+3 of the 64-digit sha256, so a sketch
+    has at most 16 rows; past that the buckets would slice past the hash."""
+    if not 1 <= depth <= 16:
+        raise ValueError(f"countmin: depth {depth} not in [1, 16]")
+
+
 def countmin_build(
     df: DataFrame, item_col: str, depth: int = 4, width: int = 256
 ) -> DataFrame:
@@ -56,8 +63,7 @@ def countmin_build(
     corpus size the reduce side is bounded by d·w counters, so the
     shuffle is a broadcast-sized aggregate no matter the input. Items
     NULL are skipped (they are absence, not a countable token)."""
-    if not 1 <= depth <= 16:
-        raise ValueError(f"countmin: depth {depth} not in [1, 16]")
+    _check_depth(depth)
     it = (
         df.select(F.col(item_col).alias("__item"))
         .where(F.col("__item").isNotNull())
@@ -92,6 +98,7 @@ def countmin_estimate(
     always (collisions only ADD). Missing (j, bucket) cells count 0
     (bucket never hit ⇒ estimate 0 ⇒ item unseen). The sketch side is
     d·w rows — broadcast; the probe is shuffle-free on the item side."""
+    _check_depth(depth)
     probes = items.select(
         F.col(item_col).alias("item"), _hex(F.col(item_col)).alias("__hx")
     ).select(
@@ -146,6 +153,7 @@ def heavy_hitters(
     est(item) = least over d of lut[j*width + bucket_j], no join at all.
     The earlier shape paid 3 tokenize/scan passes and 2 broadcast hash
     joins for the same numbers."""
+    _check_depth(depth)
     exact = (
         df.select(F.col(item_col).alias("item"))
         .where(F.col("item").isNotNull())

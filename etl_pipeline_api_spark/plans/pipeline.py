@@ -11,9 +11,22 @@ as the stage boundaries (the reference's checkpoint/restart semantics).
 Failure handling is HARDENED per SURVEY §2.6: stages fail fast with typed
 errors; only ``soft`` stages (extract) degrade to warn-and-continue.
 
-Everything between read and write is one lazy Catalyst plan — a stage
-executes exactly one job (the write), so each layer is a single distributed
-pass no matter how many operators compose inside the transform.
+Everything between read and write is one lazy Catalyst plan, so however
+many operators compose inside the transform, a stage runs only the jobs of
+its guards and its write. Building a read runs none (declared schemas).
+Measured for the gastos pipeline (plans/gastos.py) under adaptive query
+execution, which runs a shuffle's map side as a job of its own:
+
+- bronze, 2 jobs: the empty-input guard (``is_empty``, one ``LIMIT 1``
+  job) and the write;
+- silver, 4 jobs: the guard, the DQ gate's one-row aggregate (map side
+  plus result, 2 jobs) and the write;
+- gold, 3 jobs: the guard and the group-by write (map side plus write).
+
+Only bronze's guard and write scan the raw JSON; the partitions a write
+produced come from an ``Observation`` on that write, and the partitions a
+layer still lags behind the one below from a directory listing, neither
+from a job.
 """
 
 from __future__ import annotations

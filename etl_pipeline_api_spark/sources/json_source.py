@@ -10,8 +10,10 @@ Spark-first design: ONE distributed ``spark.read.json`` over the whole glob
 (multiLine, since each file is one pretty-printed document), PERMISSIVE mode
 with ``_corrupt_record`` capturing undecodable files instead of failing the
 scan. Records from shape (a) arrive as top-level rows; shape (b) rows arrive
-with a ``results`` array that we explode. The union of both paths is the
-consolidated record stream (op-union-all is implicit in the multi-file read).
+with a ``results`` array. One projection over the non-corrupt rows turns
+both into the consolidated record stream: ``explode(coalesce(results,
+array(struct(<record cols>))))``, so the files are scanned once per job
+(op-union-all is implicit in the multi-file read).
 
 At 100 TB: file listing and JSON parsing are fully parallel across executors;
 no driver-side ``json.load`` loop. Schema is declared (deterministic), not
@@ -65,16 +67,14 @@ def scan_json_pages(
         .json(path)
     )
     rec_cols = [f.name for f in record.fields]
-    # envelope rows: explode(results); bare rows: already record-shaped
-    enveloped = (
-        raw.filter(F.col("results").isNotNull())
-        .select(F.explode("results").alias("r"))
+    # envelope rows carry their records in ``results`` (an empty array yields
+    # none); a bare row is its own one-element array
+    records = F.coalesce(F.col("results"), F.array(F.struct(*rec_cols)))
+    return (
+        raw.filter(F.col(CORRUPT_COL).isNull())
+        .select(F.explode(records).alias("r"))
         .select([F.col(f"r.{c}").alias(c) for c in rec_cols])
     )
-    bare = raw.filter(
-        F.col("results").isNull() & F.col(CORRUPT_COL).isNull()
-    ).select(rec_cols)
-    return bare.unionByName(enveloped)
 
 
 def corrupt_records(spark: SparkSession, path: str, record: T.StructType) -> DataFrame:

@@ -12,7 +12,13 @@ whole-layer overwrite would be a full rewrite at 100 TB).
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+from urllib.parse import unquote
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"  # directory value of a null key
 
 
 def scan_parquet(spark: SparkSession, path: str, schema=None) -> DataFrame:
@@ -67,3 +73,51 @@ def write_partitioned(
         .partitionBy(*partition_cols)
         .parquet(path)
     )
+
+
+def partition_mtimes(
+    spark: SparkSession, path: str, partition_cols: list[str]
+) -> dict[tuple, int]:
+    """Every partition directory of a hive-partitioned layer, keyed by its
+    raw directory values (``None`` for the null key), with the directory's
+    modification time in ms (set when the write that produced it committed).
+
+    A listing through the layer's Hadoop FileSystem, no Spark
+    job. A missing layer has no partitions; entries that are not
+    ``<col>=<value>`` directories (``_SUCCESS``, leftover staging
+    directories) are skipped."""
+    jvm = spark.sparkContext._jvm
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return {}
+    level = [((), root, 0)]
+    for col in partition_cols:
+        prefix, nxt = f"{col}=", []
+        for key, parent, _ in level:
+            for st in fs.listStatus(parent):
+                name = st.getPath().getName()
+                if st.isDirectory() and name.startswith(prefix):
+                    v = unquote(name[len(prefix):])
+                    v = None if v == HIVE_NULL else v
+                    nxt.append((key + (v,), st.getPath(), st.getModificationTime()))
+        level = nxt
+    return {key: mtime for key, _, mtime in level}
+
+
+def only_partitions(
+    df: DataFrame, partition_cols: list[str], partitions: Iterable[tuple]
+) -> DataFrame:
+    """Restrict a partitioned scan to the given partition-key tuples.
+
+    Keys match null-safely (``<=>``), so a null-key partition
+    (``__HIVE_DEFAULT_PARTITION__``) is read like any other. The predicate
+    touches partition columns only, so the scan prunes to those
+    directories instead of filtering rows."""
+    match = F.lit(False)
+    for key in partitions:
+        same = F.lit(True)
+        for c, v in zip(partition_cols, key):
+            same = same & F.col(c).eqNullSafe(F.lit(v))
+        match = match | same
+    return df.where(match)

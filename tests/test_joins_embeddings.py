@@ -182,6 +182,35 @@ def test_cosine_pairs_lsh_mixed_dim_raises(spark):
         similarity.cosine_pairs_lsh(df, "vec_id", "embedding", threshold=0.5).collect()
 
 
+def test_cosine_pairs_lsh_empty_corpus_explicit_dim(spark):
+    """An empty corpus is no pairs, with or without an explicit dim."""
+    df = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    out = similarity.cosine_pairs_lsh(df, "vec_id", "embedding", threshold=0.5, dim=16)
+    assert out.schema.simpleString() == "struct<id_a:bigint,id_b:bigint,cos:double>"
+    assert out.collect() == []
+
+
+def test_cosine_pairs_lsh_rejects_duplicate_ids(spark):
+    """Ids key the re-score matrix, so a duplicate is refused up front."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [1.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match="duplicate"):
+        similarity.cosine_pairs_lsh(df, "vec_id", "embedding", threshold=0.5)
+
+
+def test_matrix_rows_rejects_missing_id():
+    """A missing id must not gather the matrix's last row (indexer -1)."""
+    import numpy as np
+    import pandas as pd
+
+    idx = pd.Index(np.array([10, 11, 12]))
+    assert similarity._matrix_rows(idx, pd.Series([12, 10])).tolist() == [2, 0]
+    with pytest.raises(KeyError, match="99"):
+        similarity._matrix_rows(idx, pd.Series([10, 99]))
+
+
 def test_cosine_pairs_blocked_matches_exact(spark, sf_dir):
     """The block-pair matmul scale path is EXACT by construction: pair set
     AND scores must equal the broadcast path, at several block counts

@@ -83,6 +83,11 @@ def test_cm_depth_guard(spark):
     df = _items(spark, {"x": 1})
     with pytest.raises(ValueError, match="depth"):
         sketches.countmin_build(df, "item", depth=17)
+    with pytest.raises(ValueError, match="depth"):
+        sketches.countmin_estimate(df, df, "item", depth=17)
+    for depth in (0, 17):
+        with pytest.raises(ValueError, match="depth"):
+            sketches.heavy_hitters(df, "item", depth=depth)
 
 
 def test_bloom_no_false_negatives_and_fp_bounded(spark):

@@ -34,12 +34,24 @@ def write_raw_pages(raw: Path, n_records: int = 20) -> None:
 def test_json_scan_dual_envelope_and_corrupt_isolation(spark, tmp_path):
     raw = tmp_path / "raw"
     write_raw_pages(raw, 20)
+    envelope = {"count": 0, "next": None, "previous": None}
+    (raw / "page_4.json").write_text(json.dumps({**envelope, "results": []}))
+    (raw / "page_5.json").write_text(json.dumps({**envelope, "results": None}))
     df = json_source.scan_json_pages(spark, str(raw), GASTOS_RECORD)
     rows = df.collect()
-    assert len(rows) == 20  # both shapes consolidated, corrupt file excluded
-    assert {r.ano for r in rows} == {2017}
+    # both shapes consolidated, corrupt file excluded; an empty ``results``
+    # yields no record, a null one reads as a bare record with no fields
+    # (one all-null row, which the silver DQ gate rejects)
+    assert len(rows) == 21
+    assert sorted(r.nome_favorecido for r in rows if r.ano is not None) == sorted(
+        f"fav {i}" for i in range(20))
+    assert [r for r in rows if r.ano is None] == [
+        tuple(None for _ in GASTOS_RECORD.fields)]
     bad = json_source.corrupt_records(spark, str(raw), GASTOS_RECORD).collect()
     assert len(bad) == 1
+    # one scan of the files serves both shapes: no per-shape branch and union
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan json") == 1 and "Union" not in plan, plan
 
 
 def test_http_source_pagination_retry_resume(tmp_path):
