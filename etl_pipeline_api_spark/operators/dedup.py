@@ -285,8 +285,7 @@ def minhash_signature_sets(
 # Spark version/session config), so one verification per session suffices —
 # re-running queryExecution().optimizedPlan() on every call would re-pay a
 # full Catalyst analyze+optimize of the whole upstream subtree per
-# invocation (the driver compile cost the plans/corpus.py prefix memo
-# exists to avoid).
+# invocation.
 _SHINGLE_GUARD_OK: dict[str, bool] = {}
 
 

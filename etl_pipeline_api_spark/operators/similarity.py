@@ -344,7 +344,7 @@ def cosine_pairs_lsh(
     (candidate-bounded, not O(N^2), while band buckets stay small).
 
     SCALE LIMIT, MEASURED (BENCH_SCALING.md "Sign-LSH -> IVF pair-finding
-    crossover"; tools/bench_crossover.py): band values are bounded by 2^w,
+    crossover"): band values are bounded by 2^w,
     so buckets grow with N and recall-viable configs carry ~N^2/c
     candidate mass — at tau=0.9 / equal 1.0 recall, ivf_pairs is faster
     at EVERY measured corpus size (5k: 10.6 s vs 2.5 s; 60k: 299 s vs
@@ -704,7 +704,7 @@ def ivf_pairs(
     rows' probe sets are disjoint — near-dup pairs (tiny angles) almost
     always share their nearest cell; the dial is n_probe (and kmeans
     refinement for tighter cells). Measured against the exact sampled
-    reference in tools/bench_crossover.py."""
+    reference: BENCH_SCALING.md "Sign-LSH -> IVF pair-finding crossover"."""
     if kmeans_iters > 0:
         _, cent_vecs = kmeans(
             df, id_col, vec_col, k=n_centroids, max_iter=kmeans_iters

@@ -107,54 +107,6 @@ def curate(
     )
 
 
-# Session-scoped prefix memo (r9, VERDICT task 6): op-corpus-curate-full
-# and op-corpus-curate-composed run the IDENTICAL prefix (same corpus,
-# same params) in the same session, and even a cache-miss call pays ~2 s
-# of pure DRIVER physical-plan compilation at sf0.1 (the three lazy
-# checkpoints each compile their stage tree — line-dedup's chunk/window/
-# collect_list tree is the hog). Materializing the silver prefix once per
-# (session, input, params) is what a production pipeline does anyway.
-# Keyed on the session's applicationId (NOT id(_jsc) — a recycled object
-# address after a stopped session's jsc is GC'd could alias a dead
-# session; ADVICE r9) + the CANONICALIZED analyzed-plan hash
-# (exprId-normalized, so two independently-built reads of the same table
-# match) + params; a hit is then CONFIRMED with sameSemantics against the
-# stored input frame, because semanticHash is 32-bit and a collision
-# would silently return the wrong corpus's prefix. Small FIFO so
-# fuzz/hypothesis suites that churn corpora don't pin blocks; eviction
-# releases the entry's localCheckpoint blocks deterministically
-# (_release_checkpoint_blocks) instead of waiting on GC + ContextCleaner.
-# Value: (input frame for the sameSemantics check,
-#         [every frame this call localCheckpointed],
-#         the exact-survivors result frame).
-_PREFIX_MEMO: dict[tuple, tuple[DataFrame, list[DataFrame], DataFrame]] = {}
-_PREFIX_MEMO_MAX = 4
-# Observable hit/miss counters (VERDICT r12 task 9): every perf claim on
-# the curate family must disclose whether its timed runs excluded prefix
-# cost; tools/profile_query.py prints the per-query delta so a judge can
-# audit memo participation in one look.
-MEMO_STATS = {"hits": 0, "misses": 0}
-
-
-def _release_checkpoint_blocks(frames: list[DataFrame]) -> None:
-    """Deterministically free an evicted memo entry's localCheckpoint
-    blocks (VERDICT r9 task 5): dropping the Python reference alone
-    leaves reclamation to GC + the async ContextCleaner, which a suite
-    that churns corpora can outrun. A lazily-checkpointed Dataset's
-    logical plan is a LogicalRDD wrapping the persisted internal RDD —
-    unpersist that RDD directly (non-blocking). Best-effort by design: a
-    plan that isn't LogicalRDD, an already-stopped session, or a py4j
-    hiccup falls back to the GC path, which stays correct (blocks are
-    only ever a cache)."""
-    for df in frames:
-        try:
-            jlogical = df._jdf.queryExecution().logical()
-            if jlogical.getClass().getSimpleName() == "LogicalRDD":
-                jlogical.rdd().unpersist(False)
-        except Exception:
-            pass
-
-
 def curate_prefix(
     docs: DataFrame,
     quality_min: float = 0.8,
@@ -172,32 +124,7 @@ def curate_prefix(
     row-local, so the whole filter phase is ONE scan-and-project — no
     per-metric scan + semi-join (the naive composition of the df-level
     ops cost 3 scans + 3 shuffles and measured ~4x slower at sf0.1).
-
-    Memoized per (session, canonical input plan, params) — see
-    _PREFIX_MEMO above. A semanticHash failure (exotic plan) just skips
-    the memo; correctness never depends on it.
     """
-    memo_key = None
-    try:
-        memo_key = (
-            docs.sparkSession.sparkContext.applicationId,
-            docs._jdf.queryExecution().analyzed().semanticHash(),
-            quality_min, lang, redact_pii, line_max_df,
-        )
-        hit = _PREFIX_MEMO.get(memo_key)
-        if hit is not None:
-            cached_input, _ckpts, result = hit
-            # semanticHash is 32 bits: confirm this is the SAME input
-            # plan, not a collision, before trusting the cached prefix
-            # (full canonicalized-plan comparison; ADVICE r9).
-            if docs.sameSemantics(cached_input):
-                MEMO_STATS["hits"] += 1
-                return result
-            # collision: compute fresh and leave the resident entry
-            # (still valid for ITS input) in place.
-            memo_key = None
-    except Exception:
-        memo_key = None
     #
     # TOKEN MATERIALIZATION (the r4→r5 plan-build fix): the lang/quality
     # metrics each reference the token array inside several lambdas, and
@@ -217,7 +144,6 @@ def curate_prefix(
     if redact_pii:
         src = src.withColumn("text", pii_clean_col("text"))
     tok = src.withColumn("__toks", tokens_expr("text")).localCheckpoint(eager=False)
-    ckpts = [tok]  # every frame this call checkpoints, for evict-time release
     lang_c, _rate = langid_cols("text", toks=F.col("__toks"))
     ann = (
         tok
@@ -240,7 +166,6 @@ def curate_prefix(
         # (measured: 33-40s build for the full capstone, exec 1s). The
         # truncation makes downstream plans build on a LogicalRDD.
         ann = ann.drop("text").join(cleaned, "doc_id").localCheckpoint(eager=False)
-        ckpts.append(ann)
 
     # exact dedup: min doc_id per rolling-hash fingerprint survives — a
     # single window shuffle on the fingerprint (no groupBy + join-back).
@@ -259,13 +184,6 @@ def curate_prefix(
         .drop("__fp", "__min_id")
         .localCheckpoint(eager=False)
     )
-    ckpts.append(exact_survivors)
-    MEMO_STATS["misses"] += 1
-    if memo_key is not None:
-        if len(_PREFIX_MEMO) >= _PREFIX_MEMO_MAX:
-            _evicted = _PREFIX_MEMO.pop(next(iter(_PREFIX_MEMO)))
-            _release_checkpoint_blocks(_evicted[1])
-        _PREFIX_MEMO[memo_key] = (docs, ckpts, exact_survivors)
     return exact_survivors
 
 

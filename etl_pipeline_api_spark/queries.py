@@ -32,8 +32,9 @@ from .operators.dq import DQSuite, non_negative_check, not_null_check, range_che
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
-# Headline set bench.py times at sf0.1 — keep to the heavy/representative ops.
-BENCH_QUERIES: list[str] = [
+# Core set: the heavy/representative ops that tier-1's registry sweeps
+# (tests/conftest.py::sweep_params) and tools/plan_audit.py run by default.
+CORE_QUERIES: list[str] = [
     "op-groupby-sum",
     "op-parquet-scan",
     "op-union-all",
@@ -93,8 +94,7 @@ BENCH_QUERIES: list[str] = [
     "op-tpch-q11",
     "op-tpch-q16",
     "op-tpch-q20",
-    # round-7: the r6 sweep's slowest entries, previously unbenched —
-    # a regression in these was invisible to bench_regress
+    # round-7: the r6 sweep's slowest entries
     "op-stream-stream-join",
     "op-bpe-encode",
     "op-stream-stateful",
@@ -102,8 +102,7 @@ BENCH_QUERIES: list[str] = [
     "op-lsh-tuning",
     "op-asof-cogroup",
     "op-semdedup",
-    # round-12: perceptual near-dup + the sketch family — perf-tracked
-    # from birth so a regression is never invisible to bench_regress
+    # round-12: perceptual near-dup + the sketch family
     "op-multimodal-neardup",
     "op-countmin-freq",
     "op-bloom-semijoin",

@@ -784,7 +784,7 @@ def q_ivf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     be a SUBSET of the exhaustive set — the precision contract
     (candidates are re-scored exactly, so false positives are
     impossible; a violation means the kernel or dedupe broke). Recall
-    of the approx config is a measured dial (tools/bench_crossover.py,
+    of the approx config is a measured dial (BENCH_SCALING.md,
     op-ivf-tuning's floors), not an invariant, so it is not gated
     here."""
     from .operators import similarity

@@ -288,7 +288,7 @@ def q_pq_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     distances it replaces, over every (query, corpus) pair.
 
     Two gates, BOTH theorems (a recall-vs-random floor was tried first
-    and failed honestly at sf1: gen_scale replicates the corpus into
+    and failed honestly at sf1: the sf1 replica repeats the corpus into
     near-clone families, the exact top-5 become clones that coarse
     m=4/k=16 codes cannot order among themselves, and set-overlap
     recall collapses to 0 even though every returned neighbor is

@@ -53,8 +53,8 @@ def get_spark(
         .config("spark.sql.warehouse.dir", "/tmp/spark_graft_warehouse")
         .config("spark.driver.memory", _driver_mem)
         # Pin the heap: -Xms == -Xmx + pre-touch. Without this, G1 shrinks
-        # and uncommits the heap after every full GC (e.g. the bench
-        # harnesses' per-query System.gc()), and the NEXT memory-heavy
+        # and uncommits the heap after every full GC (e.g. an explicit
+        # System.gc() between queries), and the NEXT memory-heavy
         # query pays a variable heap re-expansion + page-fault tax —
         # measured on op-dedup-embedding-lsh at sf0.1: gc-separated runs
         # swung 4.5–35.7 s on a floating heap vs 3.3–4.9 s pinned (r11).

@@ -26,9 +26,9 @@ def sf_dir():
 def sweep_params(names):
     """Split a full-registry sweep for the driver's test budget (VERDICT
     r12 task 1 — the 246-param sweeps were >60% of a 27-minute suite the
-    driver window truncated two rounds running): queries on the BENCH
-    path — the perf-critical set optimization rounds actually touch —
-    run by default; the long tail carries the ``slow`` marker, which the
+    time limit truncated two rounds running): queries in
+    ``queries.CORE_QUERIES`` — the heavy/representative set — run by
+    default; the long tail carries the ``slow`` marker, which the
     default addopts (``-m "not slow"``, pytest.ini) deselect. Coverage
     is additive, not lost: ``python -m pytest tests/ -m slow`` runs
     exactly the deselected remainder, and the round evidence includes
@@ -37,9 +37,9 @@ def sweep_params(names):
     (tools/check_correctness.py, 246/246 committed per round) — these
     sweeps pin structural invariants (determinism, layout invariance,
     session hygiene, fuzz edges) on top of it."""
-    from etl_pipeline_api_spark.queries import BENCH_QUERIES
+    from etl_pipeline_api_spark.queries import CORE_QUERIES
 
-    fast = set(BENCH_QUERIES)
+    fast = set(CORE_QUERIES)
     return [
         n if n in fast else pytest.param(n, marks=pytest.mark.slow)
         for n in names

@@ -12,9 +12,8 @@ invariant: a new query joins it automatically and cannot ship
 run-dependent output unnoticed.
 
 Both runs build fresh plans (each queries()[name] call re-derives the
-DataFrame), so in-query localCheckpoints re-execute; only the
-session-scoped curate-prefix memo is shared, which is itself covered by
-the dual-path gates.
+DataFrame), so in-query localCheckpoints re-execute and the second run
+re-derives everything the first one computed.
 """
 
 from __future__ import annotations

@@ -1,14 +1,10 @@
-"""Round-10 hardening tests (VERDICT r9 tasks 2 & 5, ADVICE r9):
+"""Round-10 hardening tests (VERDICT r9 task 2, ADVICE r9):
 
 1. The CollapseProject guard in operators/dedup.py is now a Catalyst
    NODE-WALK (immune to plan-string truncation), raises RuntimeError
    (survives python -O), and runs once per session (no per-call
    analyze+optimize of the whole upstream subtree).
-2. plans/corpus._PREFIX_MEMO keys on applicationId, confirms hits with
-   sameSemantics (32-bit semanticHash collisions must not return the
-   wrong corpus's prefix), and releases localCheckpoint blocks
-   DETERMINISTICALLY on FIFO eviction.
-3. op-bpe-encode's totals are pinned to 0 (not NULL) on degenerate
+2. op-bpe-encode's totals are pinned to 0 (not NULL) on degenerate
    corpora, matching the DuckDB oracle's coalesce.
 """
 
@@ -23,7 +19,6 @@ from pyspark.sql import functions as F
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from etl_pipeline_api_spark.operators import dedup as D  # noqa: E402
-from etl_pipeline_api_spark.plans import corpus as C  # noqa: E402
 
 
 def _arr_df(spark):
@@ -95,70 +90,6 @@ def test_signature_sets_guard_passes_and_caches_per_session(spark):
         D.minhash_signature_sets(docs, "doc_id", "text")
     finally:
         D._plan_has_nested_transform = orig
-
-
-# ----------------------------------------------------------------- memo
-
-def _docs(spark, seed: int):
-    rows = [
-        (i, f"the cat and the dog of the house {seed} token{seed}x{i} end")
-        for i in range(8)
-    ]
-    return spark.createDataFrame(rows, ["doc_id", "text"])
-
-
-def test_prefix_memo_hit_and_sameSemantics_confirmation(spark):
-    C._PREFIX_MEMO.clear()
-    d0 = _docs(spark, 0)
-    r0 = C.curate_prefix(d0, quality_min=0.0)
-    assert C.curate_prefix(d0, quality_min=0.0) is r0
-
-
-def test_prefix_memo_collision_does_not_return_wrong_corpus(spark):
-    """Poison the memo with d_a's key but d_b's frames — the
-    sameSemantics confirmation must reject the hit, compute fresh, and
-    leave the resident entry (valid for ITS input) in place."""
-    C._PREFIX_MEMO.clear()
-    d_a, d_b = _docs(spark, 10), _docs(spark, 11)
-    key = (
-        spark.sparkContext.applicationId,
-        d_a._jdf.queryExecution().analyzed().semanticHash(),
-        0.0, "en", False, None,
-    )
-    sentinel = d_b.limit(1)
-    C._PREFIX_MEMO[key] = (d_b, [], sentinel)
-    res = C.curate_prefix(d_a, quality_min=0.0)
-    assert res is not sentinel
-    assert C._PREFIX_MEMO[key][2] is sentinel
-    # and the fresh result is actually d_a's corpus
-    assert res.count() == 8
-
-
-def test_prefix_memo_evict_releases_checkpoint_blocks(spark):
-    C._PREFIX_MEMO.clear()
-    r0 = C.curate_prefix(_docs(spark, 0), quality_min=0.0)
-    assert r0.count() == 8  # materialize the lazy checkpoints
-    entry = next(iter(C._PREFIX_MEMO.values()))
-    rdd_ids = []
-    for f in entry[1]:
-        jlogical = f._jdf.queryExecution().logical()
-        assert jlogical.getClass().getSimpleName() == "LogicalRDD"
-        rdd_ids.append(jlogical.rdd().id())
-    pm = spark.sparkContext._jsc.getPersistentRDDs()
-    assert any(pm.containsKey(i) for i in rdd_ids), (
-        "materialized localCheckpoint RDDs should be registered persistent"
-    )
-    # churn 4 more corpora -> FIFO evicts the first entry
-    for s in range(1, 5):
-        C.curate_prefix(_docs(spark, s), quality_min=0.0)
-    assert len(C._PREFIX_MEMO) == C._PREFIX_MEMO_MAX
-    pm = spark.sparkContext._jsc.getPersistentRDDs()
-    leaked = [i for i in rdd_ids if pm.containsKey(i)]
-    assert not leaked, (
-        f"evicted memo entry left persistent RDDs {leaked} — "
-        "_release_checkpoint_blocks must unpersist deterministically"
-    )
-    C._PREFIX_MEMO.clear()
 
 
 # ----------------------------------------------------- bpe degenerate

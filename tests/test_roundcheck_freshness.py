@@ -1,7 +1,7 @@
 """The evidence-freshness gate (tools/roundcheck.py) must be
 self-enforcing: in a seeded git repo where the engine's last commit
-postdates the committed FULLSWEEP/BENCH_SCALING artifacts, the check
-reports problems; committing fresh artifacts (or waiving the engine
+postdates the committed FULLSWEEP artifact, the check reports
+problems; committing a fresh one (or waiving the engine
 commit hash in SWEEP_WAIVER) clears them. No Spark needed."""
 
 from __future__ import annotations
@@ -53,7 +53,6 @@ def seeded_repo(tmp_path: Path) -> Path:
     (d / "etl_pipeline_api_spark").mkdir()
     (d / "etl_pipeline_api_spark" / "queries.py").write_text("# v1\n")
     (d / "FULLSWEEP_r1.txt").write_text("229/229 passed\n")
-    (d / "BENCH_SCALING.md").write_text("# scaling\n")
     _git(d, "add", "-A")
     _commit(d, "engine v1 + artifacts", 1)
     return d
@@ -64,39 +63,36 @@ def test_fresh_artifacts_pass(seeded_repo: Path) -> None:
 
 
 def test_stale_sweep_fails(seeded_repo: Path) -> None:
-    # engine commit AFTER the artifacts -> both artifacts stale
+    # engine commit AFTER the artifacts -> the sweep is stale
     (seeded_repo / "etl_pipeline_api_spark" / "queries.py").write_text("# v2\n")
     _git(seeded_repo, "add", "-A")
     _commit(seeded_repo, "engine v2", 2)
     problems = roundcheck.check_evidence_freshness(str(seeded_repo))
     assert any("FULLSWEEP" in p for p in problems)
-    assert any("BENCH_SCALING" in p for p in problems)
 
 
 def test_recommitted_artifacts_clear(seeded_repo: Path) -> None:
     (seeded_repo / "etl_pipeline_api_spark" / "queries.py").write_text("# v2\n")
     _git(seeded_repo, "add", "-A")
     _commit(seeded_repo, "engine v2", 2)
-    # a NEWER round's sweep + refreshed scaling table, committed after
+    # a NEWER round's sweep, committed after
     (seeded_repo / "FULLSWEEP_r2.txt").write_text("229/229 passed\n")
-    (seeded_repo / "BENCH_SCALING.md").write_text("# scaling v2\n")
     _git(seeded_repo, "add", "-A")
     _commit(seeded_repo, "round 2 artifacts", 3)
     assert roundcheck.check_evidence_freshness(str(seeded_repo)) == []
 
 
 def test_old_rounds_sweep_does_not_mask(seeded_repo: Path) -> None:
-    # committing ONLY a refreshed scaling table must not clear the
-    # FULLSWEEP staleness: the newest ROUND's sweep is what counts
+    # committing an OLDER round's sweep after the engine change must not
+    # clear the staleness: the newest ROUND's sweep is what counts
     (seeded_repo / "etl_pipeline_api_spark" / "queries.py").write_text("# v2\n")
     _git(seeded_repo, "add", "-A")
     _commit(seeded_repo, "engine v2", 2)
-    (seeded_repo / "BENCH_SCALING.md").write_text("# scaling v2\n")
+    (seeded_repo / "FULLSWEEP_r0.txt").write_text("229/229 passed\n")
     _git(seeded_repo, "add", "-A")
-    _commit(seeded_repo, "scaling only", 3)
+    _commit(seeded_repo, "old round's sweep only", 3)
     problems = roundcheck.check_evidence_freshness(str(seeded_repo))
     assert any("FULLSWEEP" in p for p in problems)
-    assert not any("BENCH_SCALING" in p for p in problems)
 
 
 def test_waiver_clears(seeded_repo: Path) -> None:

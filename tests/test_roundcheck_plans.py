@@ -104,57 +104,6 @@ def test_latest_plans_file_picks_highest_round(tmp_path):
     assert roundcheck.latest_plans_file(str(tmp_path)).endswith("PLANS_r10.md")
 
 
-# ---------------------------------------------------------------------
-# bench regression gate (tools/bench_regress.py)
-# ---------------------------------------------------------------------
-
-def _bench_regress():
-    import importlib
-    import sys as _sys
-    _sys.path.insert(0, str(__import__("pathlib").Path(__file__).parent.parent / "tools"))
-    return importlib.import_module("bench_regress")
-
-
-def test_bench_regress_flags_seeded_regression(tmp_path):
-    br = _bench_regress()
-    import json
-    old = tmp_path / "old.json"
-    new = tmp_path / "new.json"
-    old.write_text(json.dumps({"queries": {"op-a": 1.0, "op-b": 0.5}}))
-    new.write_text(json.dumps({"queries": {"op-a": 2.0, "op-b": 0.52}}))
-    qo, qn = br.load_queries(str(old)), br.load_queries(str(new))
-    regs, waived, watch, drift = br.compare(qo, qn)
-    assert len(regs) == 1 and regs[0].startswith("op-a")  # b within wobble
-    assert waived == [] and watch == []
-    # lower-median drift: op-b's 1.04 ratio, not the seeded 2.0
-    assert abs(drift - 1.04) < 1e-9
-
-
-def test_bench_regress_parses_truncated_driver_tail(tmp_path):
-    br = _bench_regress()
-    import json
-    p = tmp_path / "r.json"
-    # the r5 shape: parsed null, raw line in "tail", cut mid-number
-    p.write_text(json.dumps({
-        "parsed": None,
-        "tail": '{"queries": {"op-a": 1.25, "op-b": 0.75, "op-c": 0.',
-    }))
-    q = br.load_queries(str(p))
-    assert q == {"op-a": 1.25, "op-b": 0.75}  # pair cut mid-number dropped
-
-
-def test_bench_regress_passes_on_improvement(tmp_path):
-    br = _bench_regress()
-    import json
-    old = tmp_path / "old.json"
-    new = tmp_path / "new.json"
-    old.write_text(json.dumps({"queries": {"op-a": 2.0}}))
-    new.write_text(json.dumps({"queries": {"op-a": 1.0, "op-new": 9.9}}))
-    assert br.compare(
-        br.load_queries(str(old)), br.load_queries(str(new))
-    ) == ([], [], [], 1.0)  # drift clamps at 1.0 on an all-faster batch
-
-
 def test_query_registry_rejects_duplicate_names():
     import pytest as _pytest
     from etl_pipeline_api_spark import queries as q
@@ -163,159 +112,3 @@ def test_query_registry_rejects_duplicate_names():
         q.query("op-groupby-sum")(lambda spark, sf_dir: None)
     # registry unchanged: the original callable is still registered
     assert callable(q.QUERIES["op-groupby-sum"])
-
-
-def test_bench_regress_waiver_downgrades_known_slowdown(tmp_path, monkeypatch):
-    br = _bench_regress()
-    monkeypatch.setitem(br.WAIVERS, "op-w", "deliberate tradeoff")
-    # a UNIFORM 2x slowdown must still fail the gate even with drift
-    # normalization (drift caps at 1.25; 2x is +60% adjusted) — the
-    # normalizer absorbs container spread, not code-caused slowdowns
-    regs, waived, watch, drift = br.compare(
-        {"op-w": 1.0, "op-x": 1.0}, {"op-w": 2.0, "op-x": 2.0}
-    )
-    assert drift == 1.25
-    assert len(regs) == 1 and regs[0].startswith("op-x")
-    assert len(waived) == 1 and "deliberate tradeoff" in waived[0]
-
-
-def test_bench_regress_orders_builder_head_records(tmp_path, monkeypatch):
-    """Builder-side BENCH_HEAD_rN.json (committed at final HEAD, VERDICT
-    r9 task 1b) slots BETWEEN the driver's r(N-1) and rN records, so the
-    gate can run green before the round ends and the driver's post-round
-    batch then compares against the builder's like-for-like snapshot."""
-    br = _bench_regress()
-    import json
-    for name, q in [("BENCH_r08.json", 1.0), ("BENCH_r09.json", 2.0),
-                    ("BENCH_HEAD_r10.json", 3.0)]:
-        (tmp_path / name).write_text(json.dumps({"queries": {"op-a": q}}))
-    monkeypatch.setattr(br, "REPO", str(tmp_path))
-    old_p, new_p = br.latest_two()
-    assert old_p.endswith("BENCH_r09.json")
-    assert new_p.endswith("BENCH_HEAD_r10.json")
-    (tmp_path / "BENCH_r10.json").write_text(
-        json.dumps({"queries": {"op-a": 4.0}})
-    )
-    old_p, new_p = br.latest_two()
-    assert old_p.endswith("BENCH_HEAD_r10.json")
-    assert new_p.endswith("BENCH_r10.json")
-
-
-def test_bench_regress_segment_pressure_brackets_and_clamps():
-    """r12 (VERDICT r11 task 1): mid-batch probe samples let the gate
-    scale each query's expectation by the pressure its own SEGMENT
-    measured — the max of the two bracketing samples' component-median
-    ratios vs the batch-start anchor, clamped to [1.0, 2.0]."""
-    br = _bench_regress()
-    anchor = {"cpu": 0.1, "shuffle": 0.4, "scan": 0.2, "python": 0.3,
-              "total": 1.0, "after": 0}
-    calm = dict(anchor, after=15)
-    hot = {"cpu": 0.16, "shuffle": 0.64, "scan": 0.32, "python": 0.48,
-           "total": 1.6, "after": 30}
-    probes = [anchor, calm, hot]
-    # pos 5: bracketed by (anchor, calm) -> no pressure
-    assert br.segment_pressure(probes, 5) == 1.0
-    # pos 20: bracketed by (calm, hot) -> max of the two = 1.6
-    assert abs(br.segment_pressure(probes, 20) - 1.6) < 1e-9
-    # pos 40: past the last sample -> that sample's pressure
-    assert abs(br.segment_pressure(probes, 40) - 1.6) < 1e-9
-    # legacy record (no samples) -> neutral
-    assert br.segment_pressure(None, 5) == 1.0
-    # a 5x sample clamps at 2.0 — beyond that the gate must fail loud
-    wild = {k: (v * 5 if k != "after" else 60) for k, v in anchor.items()}
-    assert br.segment_pressure([anchor, wild], 50) == 2.0
-
-
-def test_bench_regress_segment_pressure_scales_expectation():
-    """A query inside a measured-hot segment passes when its delta is
-    inside the segment's pressure; a query in a CALM segment with the
-    same delta still fails (pressure elsewhere can't launder it)."""
-    br = _bench_regress()
-    anchor = {"cpu": 0.1, "shuffle": 0.4, "scan": 0.2, "python": 0.3,
-              "total": 1.0, "after": 0}
-    hot = {k: (v * 1.8 if k != "after" else 1) for k, v in anchor.items()}
-    calm_tail = dict(anchor, after=2)
-    # op-a sits in the hot segment (pos 0: bracketed by anchor+hot);
-    # op-b in the calm tail (pos 1: bracketed by hot+calm -> max 1.8...)
-    # use three queries so op-c (pos 2) is bracketed calm-calm.
-    old = {"op-a": 1.0, "op-b": 1.0, "op-c": 1.0}
-    new = {"op-a": 1.7, "op-b": 1.0, "op-c": 1.7}
-    probes = [anchor, hot, calm_tail, dict(anchor, after=3)]
-    regs, waived, watch, drift = br.compare(
-        old, new, drift=1.0, new_probes=probes
-    )
-    # op-a (+70%) cleared by its segment's 1.8x pressure; op-c (+70%)
-    # sits between two CALM samples -> real regression, flagged
-    assert len(regs) == 1 and regs[0].startswith("op-c"), regs
-
-
-def test_bench_regress_retry_rescues_spike_but_stays_visible():
-    """r12: the bench's own deferred re-measurement (retries) joins the
-    v_eff pool — a pressure spike re-measures healthy and clears the
-    flag (as a WATCH line, never silently); a regression whose retry is
-    still slow stands."""
-    br = _bench_regress()
-    old = {"op-spike": 1.0, "op-real": 1.0}
-    new = {"op-spike": 3.4, "op-real": 3.4}
-    regs, waived, watch, drift = br.compare(
-        old, new, drift=1.0,
-        retries={"op-spike": 1.05, "op-real": 3.3},
-        retries_min={"op-spike": 0.98, "op-real": 3.2},
-    )
-    assert len(regs) == 1 and regs[0].startswith("op-real"), regs
-    assert any(w.startswith("op-spike") and "[retry" in w for w in watch)
-
-
-def test_bench_regress_min_strips_one_sided_noise(tmp_path):
-    """r10: when the new record carries per-query minimums, the gate
-    tests the min — scheduler/GC noise only ADDS time, so a median
-    inflated by mid-batch interference (min healthy) is noise, while a
-    real regression raises min and median together."""
-    br = _bench_regress()
-    import json
-    old = tmp_path / "old.json"
-    new = tmp_path / "new.json"
-    old.write_text(json.dumps({"queries": {"op-a": 1.0, "op-b": 1.0}}))
-    # op-a: median +80% but min healthy -> noise, not flagged
-    # op-b: median AND min +80% -> real, flagged
-    new.write_text(json.dumps({
-        "queries": {"op-a": 1.8, "op-b": 1.8},
-        "queries_min": {"op-a": 1.05, "op-b": 1.8},
-    }))
-    d = json.load(open(new))
-    regs, waived, watch, drift = br.compare(
-        br.load_queries(str(old)), br.load_queries(str(new)),
-        d["queries_min"],
-    )
-    assert len(regs) == 1 and regs[0].startswith("op-b"), regs
-    assert waived == []
-    # the min rescued op-a's inflated median -> visible as a WATCH line
-    # (r10 ADVICE), never silently dropped
-    assert len(watch) == 1 and watch[0].startswith("op-a"), watch
-
-
-def test_bench_retry_suspects_trigger_semantics():
-    """r12: the deferred-retry trigger fires only when median AND min
-    both clear the gate threshold vs the previous committed record —
-    min-rescued medians are noise (no retry), new queries have no
-    baseline (no retry), and the cap bounds a broad regression."""
-    import importlib
-    import sys as _sys
-    from pathlib import Path
-
-    _sys.path.insert(0, str(Path(__file__).parent.parent))
-    bench = importlib.import_module("bench")
-    prev = {f"op-{i}": 1.0 for i in range(12)}
-    timings = {"op-0": 3.0, "op-1": 3.0, "op-new": 9.0, "op-2": 1.1}
-    tmin = {"op-0": 2.8, "op-1": 1.05, "op-new": 9.0, "op-2": 1.0}
-    got = bench.retry_suspects(timings, tmin, prev, 1.0, 0.35, 0.3)
-    # op-0: med+min both over -> retried; op-1: min rescued -> not;
-    # op-new: no baseline -> not; op-2: inside threshold -> not
-    assert got == ["op-0"]
-    # drift scales the expectation: at x2.5 drift op-0's 2.8 min is
-    # inside 1.0*2.5*1.35 -> nothing retried
-    assert bench.retry_suspects(timings, tmin, prev, 2.5, 0.35, 0.3) == []
-    # cap bounds a broad regression, preserving execution order
-    broad = {f"op-{i}": 5.0 for i in range(12)}
-    got = bench.retry_suspects(broad, dict(broad), prev, 1.0, 0.35, 0.3, cap=8)
-    assert len(got) == 8 and got == [f"op-{i}" for i in range(8)]

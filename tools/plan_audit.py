@@ -1,4 +1,4 @@
-"""Physical-plan audit for the headline queries.
+"""Physical-plan audit for the core queries.
 
 Prints, per query, the scale-relevant plan facts Catalyst chose at
 $SPARK_GRAFT_SF_DIR (default sf0.1):
@@ -11,7 +11,7 @@ $SPARK_GRAFT_SF_DIR (default sf0.1):
 - red flags: CartesianProduct / BroadcastNestedLoopJoin outside the
   deliberate small-side cross joins.
 
-Usage: python tools/plan_audit.py [name ...]   (default: BENCH_QUERIES)
+Usage: python tools/plan_audit.py [name ...]   (default: CORE_QUERIES)
 Output is markdown (PLANS_r{N}.md is a committed snapshot).
 
 NB: counts come from the POST-EXECUTION adaptive plan's string rendering,
@@ -28,7 +28,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from etl_pipeline_api_spark.queries import BENCH_QUERIES, QUERIES  # noqa: E402
+from etl_pipeline_api_spark.queries import CORE_QUERIES, QUERIES  # noqa: E402
 import __spark_entry__  # noqa: E402,F401  (registers every query batch)
 from etl_pipeline_api_spark.session import get_spark  # noqa: E402
 
@@ -152,7 +152,7 @@ TRIAGE = {
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    names = sys.argv[1:] or BENCH_QUERIES
+    names = sys.argv[1:] or CORE_QUERIES
     spark = get_spark("plan_audit")
     print(f"# Plan audit @ {sf_dir}\n")
     for name in names:

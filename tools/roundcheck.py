@@ -134,8 +134,8 @@ def _git_last_commit_ts(root: str, paths: list[str]) -> tuple[int, str] | None:
 
 
 def check_evidence_freshness(root: str) -> list[str]:
-    """Gate: the newest committed FULLSWEEP_r*.txt and BENCH_SCALING.md
-    must be at least as new as the last commit touching the engine
+    """Gate: the newest round's committed FULLSWEEP_r*.txt must be at
+    least as new as the last commit touching the engine
     (etl_pipeline_api_spark/, __spark_entry__.py) — round 6 shipped a
     final commit that changed two queries' gates AFTER the committed
     sweep; it happened to be green only because the judge re-ran it.
@@ -176,31 +176,25 @@ def check_evidence_freshness(root: str) -> list[str]:
         }
         waived = h_code in hashes
 
-    for label, pattern in [
-        ("FULLSWEEP", "FULLSWEEP_r*.txt"),
-        ("BENCH_SCALING", "BENCH_SCALING.md"),
-    ]:
-        files = _glob.glob(os.path.join(root, pattern))
-        if label == "FULLSWEEP" and files:
-            # newest ROUND only — an old round's artifact being old is fine
-            def rnd(p: str) -> int:
-                m = _re.search(r"_r(\d+)", os.path.basename(p))
-                return int(m.group(1)) if m else -1
+    files = _glob.glob(os.path.join(root, "FULLSWEEP_r*.txt"))
+    if files:
+        # newest ROUND only — an old round's artifact being old is fine
+        def rnd(p: str) -> int:
+            m = _re.search(r"_r(\d+)", os.path.basename(p))
+            return int(m.group(1)) if m else -1
 
-            top = max(rnd(p) for p in files)
-            files = [p for p in files if rnd(p) == top]
-        arts = [_git_last_commit_ts(root, [p]) for p in files]
-        arts = [a for a in arts if a is not None]
-        if not arts:
-            problems.append(f"{label}: no committed artifact found")
-            continue
-        t_art = max(a[0] for a in arts)
-        if t_art < t_code and not waived:
-            problems.append(
-                f"{label}: newest committed artifact predates the last "
-                f"engine commit {h_code[:9]} — re-run and commit it "
-                f"(or waive {h_code[:9]} in SWEEP_WAIVER)"
-            )
+        top = max(rnd(p) for p in files)
+        files = [p for p in files if rnd(p) == top]
+    arts = [_git_last_commit_ts(root, [p]) for p in files]
+    arts = [a for a in arts if a is not None]
+    if not arts:
+        problems.append("FULLSWEEP: no committed artifact found")
+    elif max(a[0] for a in arts) < t_code and not waived:
+        problems.append(
+            f"FULLSWEEP: newest committed artifact predates the last "
+            f"engine commit {h_code[:9]} — re-run and commit it "
+            f"(or waive {h_code[:9]} in SWEEP_WAIVER)"
+        )
     return problems
 
 
@@ -211,7 +205,7 @@ def run_freshness_gate(root: str) -> int:
         for p in problems:
             print(f"  - {p}")
         return 1
-    print("ok: sweep/scaling evidence is as new as the last engine commit")
+    print("ok: sweep evidence is as new as the last engine commit")
     return 0
 
 
@@ -251,16 +245,10 @@ def main() -> int:
     print(f"ok: {sum(len(v) for v in cur.values())} schemas match the record")
     root = os.path.dirname(HERE)
     rc = run_plans_gate(latest_plans_file(root))
-    # evidence-freshness gate: the committed dual-SF sweep and scaling
-    # table must postdate the last engine commit (r6 lesson: a final
-    # commit changed two gates after the committed sweep)
-    rc = rc or run_freshness_gate(root)
-    # bench regression gate: same self-enforcement for "no query got
-    # slower without a reason" (tools/bench_regress.py; diffs the two
-    # latest driver-recorded BENCH_r*.json)
-    import bench_regress
-
-    return rc or bench_regress.main()
+    # evidence-freshness gate: the committed dual-SF sweep must postdate
+    # the last engine commit (r6 lesson: a final commit changed two gates
+    # after the committed sweep)
+    return rc or run_freshness_gate(root)
 
 
 if __name__ == "__main__":
