@@ -9,8 +9,11 @@ Layout:
 - ``plans``      medallion Pipeline (read → transform → DQ gate → write)
 - ``streaming``  Structured Streaming variants (windowed aggs, watermarks)
 - ``queries``    named operator queries + DuckDB oracle SQL (driver contract)
+
+Each operator has one import path: its home module under ``operators``,
+``sources`` or ``plans``. The package root exports only ``get_spark``.
 """
 
-from .session import get_spark, load_tables
+from .session import get_spark
 
-__all__ = ["get_spark", "load_tables"]
+__all__ = ["get_spark"]

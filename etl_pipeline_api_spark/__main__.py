@@ -93,15 +93,12 @@ def main(argv: list[str] | None = None) -> int:
         from .plans.gastos import build_pipeline
 
         spark = get_spark("cli")
-        pipe = build_pipeline(
-            raw_dir=args.raw,
-            bronze_dir=os.path.join(args.out, "bronze"),
-            silver_dir=os.path.join(args.out, "silver"),
-            gold_dir=os.path.join(args.out, "gold"),
-        )
-        results = pipe.run(spark)
-        for stage, df in results.items():
-            print(f"{stage}: {df.count()} rows")
+        layers = {k: os.path.join(args.out, k) for k in ("bronze", "silver", "gold")}
+        build_pipeline(args.raw, *layers.values()).run(spark)
+        # count what each stage wrote: counting the frames run() returns
+        # would re-run each stage's plan from its input
+        for layer, path in layers.items():
+            print(f"{layer}: {spark.read.parquet(path).count()} rows")
         return 0
 
     return 2

@@ -110,10 +110,6 @@ def _checked_vec(vec, dim: int, op: str):
     )
 
 
-def with_norm(df: DataFrame, vec_col: str, out: str = "nrm") -> DataFrame:
-    return df.withColumn(out, _norm(F.col(vec_col).cast("array<double>")))
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,

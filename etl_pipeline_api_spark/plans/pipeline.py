@@ -8,8 +8,8 @@ going — main.py:161-164 etc.). Here a stage is declarative:
 
 run as read → transform → DQ gate → write, with materialized parquet layers
 as the stage boundaries (the reference's checkpoint/restart semantics).
-Failure handling is HARDENED per SURVEY §2.6: stages fail fast with typed
-errors; only ``soft`` stages (extract) degrade to warn-and-continue.
+Failure handling is HARDENED per SURVEY §2.6: every stage fails fast, and
+``Pipeline.run`` wraps the first failure in a ``StageError`` naming the stage.
 
 Everything between read and write is one lazy Catalyst plan, so however
 many operators compose inside the transform, a stage runs only the jobs of
@@ -31,7 +31,6 @@ from a job.
 
 from __future__ import annotations
 
-import logging
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -39,8 +38,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.cleaning import is_empty
 from ..operators.dq import DQSuite
-
-log = logging.getLogger(__name__)
 
 
 class StageError(RuntimeError):
@@ -60,12 +57,10 @@ class Stage:
     transform: Callable[[DataFrame], DataFrame] = lambda df: df
     dq: DQSuite | None = None
     write: Callable[[DataFrame], None] | None = None
-    soft: bool = False  # op-stage-abort: warn-and-continue (extract only)
-    allow_empty: bool = False
 
     def run(self, spark: SparkSession) -> DataFrame:
         df = self.read(spark)
-        if not self.allow_empty and is_empty(df):
+        if is_empty(df):
             raise EmptyInputError(f"stage '{self.name}': empty input")
         out = self.transform(df)
         if self.dq is not None:
@@ -87,8 +82,5 @@ class Pipeline:
             try:
                 results[stage.name] = stage.run(spark)
             except Exception as e:  # noqa: BLE001
-                if stage.soft:
-                    log.warning("soft stage '%s' failed, continuing: %r", stage.name, e)
-                    continue
                 raise StageError(stage.name, e) from e
         return results

@@ -119,9 +119,3 @@ def ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(zpath)
     sent.add(key)
     ship_package._sent = sent
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Load driver testdata parquet tables as DataFrames (see TESTDATA.md)."""
-    out = [spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet")) for n in names]
-    return out[0] if len(out) == 1 else out

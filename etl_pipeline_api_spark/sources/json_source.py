@@ -29,10 +29,6 @@ from pyspark.sql import types as T
 CORRUPT_COL = "_corrupt_record"
 
 
-def record_schema(fields: list[tuple[str, T.DataType]]) -> T.StructType:
-    return T.StructType([T.StructField(n, t, True) for n, t in fields])
-
-
 def envelope_schema(record: T.StructType) -> T.StructType:
     """Schema covering BOTH raw shapes: bare-array files parse as an array in
     column ``_bare``? No — Spark maps a top-level JSON array to one row per

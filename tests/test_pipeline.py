@@ -189,115 +189,3 @@ def test_layer_reads_launch_no_job(spark, tmp_path):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     assert [df.count() for df in reads] == [24, 24, 24, 24]
-
-
-def test_engine_facade(spark, tmp_path):
-    from pyspark.sql import Row
-    from pyspark.sql import functions as F
-
-    from etl_pipeline_api_spark.engine import Engine
-    from etl_pipeline_api_spark.operators.dq import non_negative_check
-
-    eng = Engine(spark)
-    df = spark.createDataFrame(
-        [Row(ano=2024, mes=1, valor=10.0), Row(ano=2024, mes=2, valor=-1.0)]
-    )
-    out = str(tmp_path / "part")
-    eng.write_partitioned(df, out)
-    back = eng.read_parquet(out)
-    assert back.count() == 2
-    viol = eng.dq(back, [non_negative_check("valor")]).collect()[0]
-    assert viol["negative_valor"] == 1
-    back.createOrReplaceTempView("facade_t")
-    assert eng.sql("SELECT sum(valor) AS s FROM facade_t").collect()[0].s == 9.0
-    import pytest as _pytest
-
-    from etl_pipeline_api_spark.operators.dq import DataQualityError
-
-    with _pytest.raises(DataQualityError):
-        eng.dq_gate(back, [non_negative_check("valor")])
-
-
-def test_engine_facade_operator_surface(spark, tmp_path):
-    """The round-4 facade methods are thin delegations — one smoke each."""
-    from pyspark.sql import Row
-
-    from etl_pipeline_api_spark.engine import Engine
-
-    eng = Engine(spark)
-    docs = spark.createDataFrame([
-        Row(doc_id=1, text="alpha beta gamma delta", lang="en"),
-        Row(doc_id=2, text="alpha beta gamma delta", lang="en"),
-        Row(doc_id=3, text="something else entirely here", lang="en"),
-    ])
-    # dedup: 1 and 2 are exact dups -> min id survives
-    kept = {r.doc_id for r in eng.dedup_exact(docs, ["text"], "doc_id").collect()}
-    assert kept == {1, 3}
-    pairs = {(r.id_a, r.id_b) for r in eng.dedup_minhash(docs, "doc_id", "text").collect()}
-    assert (1, 2) in pairs
-    # orc round trip
-    out = str(tmp_path / "orc")
-    eng.write_orc(docs, out)
-    assert eng.read_orc(out).count() == 3
-    # sampling + diagnostics
-    assert eng.stratified_sample(docs, ["lang"], "doc_id", 2).count() == 2
-    rep = eng.skew_report(docs, "lang").collect()[0]
-    assert rep.n_keys == 1 and rep.max_n == 3
-    # similarity
-    emb = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(4)], "vec_id long, embedding array<double>"
-    )
-    topk = eng.similar_topk(emb, emb.limit(1), "vec_id", "embedding", k=2)
-    assert topk.count() == 2
-    # curation capstone delegation
-    assert eng.curate(docs, quality_min=0.0).count() <= 3
-
-
-def test_engine_facade_stats_graph_surface(spark):
-    """The batch-11/12 facade methods are thin delegations — one smoke
-    each over tiny frames."""
-    import datetime as dt
-
-    from pyspark.sql import Row
-
-    from etl_pipeline_api_spark.engine import Engine
-
-    eng = Engine(spark)
-    nums = spark.createDataFrame(
-        [Row(a=1.0, b=2.0), Row(a=2.0, b=4.0), Row(a=3.0, b=6.0)]
-    )
-    assert eng.corr_matrix(nums, ["a", "b"]).collect()[0]["corr"] == 1.0
-    cats = spark.createDataFrame([Row(x="u"), Row(x="v")])
-    assert eng.entropy_profile(cats, ["x"]).collect()[0]["entropy_bits"] == 1.0
-    xy = spark.createDataFrame([Row(x="0", y="a"), Row(x="1", y="b")])
-    assert eng.mutual_info(xy, "x", "y").collect()[0]["mi_bits"] == 1.0
-    amounts = spark.createDataFrame([Row(v=123.0), Row(v=456.0), Row(v=789.0)])
-    assert {r["digit"] for r in eng.benford(amounts, "v").collect()} == {1, 4, 7}
-    edges = spark.createDataFrame(
-        [Row(a=1, c=2, support=2), Row(a=1, c=3, support=2),
-         Row(a=2, c=3, support=2)]
-    )
-    pr = eng.pagerank(edges, iters=2, k=5).collect()
-    assert len(pr) == 3
-    tri = eng.triangle_stats(edges).collect()[0]
-    assert tri["n_triangles"] == 1
-    baskets = spark.createDataFrame(
-        [Row(b=1, i=10), Row(b=1, i=20), Row(b=2, i=10), Row(b=2, i=20)]
-    )
-    be = eng.basket_edges(baskets, "b", "i", min_support=2).collect()
-    assert [(r.a, r.c) for r in be] == [(10, 20)]
-    iv = spark.createDataFrame(
-        [Row(id=1, s=0, e=10_000_000), Row(id=2, s=5_000_000, e=15_000_000)]
-    )
-    assert len(eng.interval_overlaps(iv, "id", "s", "e").collect()) == 1
-    assert eng.peak_concurrency(iv, "s", "e").collect()[0]["peak"] == 2
-    emb = spark.createDataFrame(
-        [Row(vec_id=10, embedding=[1.0, 0.0], label=1),
-         Row(vec_id=11, embedding=[0.9, 0.1], label=1),
-         Row(vec_id=0, embedding=[1.0, 0.05], label=9)]
-    )
-    got = eng.knn_classify(
-        emb.filter("vec_id >= 10"), emb.filter("vec_id < 10"),
-        "vec_id", "embedding", "label", k=2,
-    ).collect()[0]
-    assert got["pred_label"] == 1
