@@ -83,7 +83,10 @@ def main(argv: list[str] | None = None) -> int:
         rows = df.limit(args.n).collect()
         n = df.count()
         dt = time.time() - t0
-        df.limit(args.n).show(args.n, truncate=60)
+        # print the rows already collected: show() would run the query again
+        print("\t".join(df.columns))
+        for r in rows:
+            print("\t".join(str(v)[:60] for v in r))
         print(f"{n} rows total ({len(rows)} shown) in {dt:.2f}s")
         return 0
 

@@ -31,11 +31,14 @@ from pyspark.sql import functions as F
 
 
 def _micros(df: DataFrame, ts_col: str) -> Column:
-    """Epoch-µs expression for gap/order math, type-driven like
-    operators.joins.range_join_count: TIMESTAMP and TIMESTAMP_NTZ cast
-    (any session-tz offset is identical across rows, so orderings, gaps
-    and strict-after comparisons — all differences — are unaffected);
-    legacy bigint-nanos truncates ns→µs; anything else raises loudly."""
+    """Epoch-µs expression for gap/order math (also the time buckets of
+    operators.joins.range_join_count), driven by the column's actual type:
+    TIMESTAMP and TIMESTAMP_NTZ cast to TIMESTAMP, since ``unix_micros``
+    rejects NTZ (any session-tz offset is identical across rows, so
+    orderings, gaps and strict-after comparisons — all differences — are
+    unaffected); legacy bigint-nanos truncates ns→µs with integer ``div``
+    (a blanket cast would read it as SECONDS); anything else raises
+    loudly."""
     dt = dict(df.dtypes).get(ts_col)
     if dt == "bigint":
         return F.expr(f"`{ts_col}` div 1000")

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .behavioral import _micros
+
 
 def salted_join(
     facts: DataFrame,
@@ -97,35 +99,14 @@ def range_join_count(
     """
     width = lookback_s * 1_000_000  # microseconds
 
-    def _micros(df: DataFrame):
-        # Type-driven like streaming.events.normalize_event_ts: a blanket
-        # cast("timestamp") would read a legacy bigint-nanos column as
-        # SECONDS since epoch — silently absurd buckets. Branch on the
-        # actual dtype instead and reject anything non-temporal loudly.
-        dt = dict(df.dtypes).get(ts_col)
-        if dt == "bigint":
-            # legacy int64-nanos encoding: integer ns→µs truncation
-            # (matches the batch reader; div, not /1000 via double)
-            return F.expr(f"`{ts_col}` div 1000")
-        if dt in ("timestamp", "timestamp_ntz"):
-            # cast accepts TIMESTAMP and NTZ alike (unix_micros alone
-            # rejects NTZ); any session-tz offset the cast adds is
-            # IDENTICAL on both sides, so bucket adjacency and the range
-            # predicate — which only compare differences — are unaffected.
-            return F.unix_micros(F.col(ts_col).cast("timestamp"))
-        raise TypeError(
-            f"range_join_count: column {ts_col!r} has type {dt!r}; expected "
-            "timestamp, timestamp_ntz, or the legacy bigint-nanos encoding"
-        )
-
     lt = left.select(
         F.col(id_col).alias("__id"),
         F.col(key_col).alias("__k"),
-        _micros(left).alias("__t"),
+        _micros(left, ts_col).alias("__t"),
     ).withColumn("__b", F.expr(f"__t div {width}"))  # integer div: exact bucketing
     rt = right.select(
         F.col(key_col).alias("__k"),
-        _micros(right).alias("__t2"),
+        _micros(right, ts_col).alias("__t2"),
     ).withColumn(
         "__b",
         F.explode(

@@ -33,7 +33,6 @@ def get_spark(
     on a multi-executor cluster (AQE handles the difference in parallelism).
     """
     cpus = cpus or DEFAULT_CPUS
-    _driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -51,17 +50,7 @@ def get_spark(
         # bucketed tables (operators.joins.bucketed_table) live outside the
         # repo tree; at real scale this is the lake/metastore warehouse path
         .config("spark.sql.warehouse.dir", "/tmp/spark_graft_warehouse")
-        .config("spark.driver.memory", _driver_mem)
-        # Pin the heap: -Xms == -Xmx + pre-touch. Without this, G1 shrinks
-        # and uncommits the heap after every full GC (e.g. an explicit
-        # System.gc() between queries), and the NEXT memory-heavy
-        # query pays a variable heap re-expansion + page-fault tax —
-        # measured on op-dedup-embedding-lsh at sf0.1: gc-separated runs
-        # swung 4.5–35.7 s on a floating heap vs 3.3–4.9 s pinned (r11).
-        # Production clusters pin executor/driver heaps for the same
-        # reason; the one-time pre-touch cost (~8 GB, parallel) is paid at
-        # session start instead of mid-query.
-        .config("spark.driver.extraJavaOptions", f"-Xms{_driver_mem} -XX:+AlwaysPreTouch")
+        .config("spark.driver.memory", "8g")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -10,7 +10,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from etl_pipeline_api_spark.operators import behavioral, dedup, diagnostics
+from etl_pipeline_api_spark.operators import behavioral, dedup, diagnostics, joins
 
 T0 = dt.datetime(2024, 1, 1, 12, 0, 0)
 
@@ -123,8 +123,12 @@ def test_transitions_rejects_non_temporal_ts(spark):
     df = spark.createDataFrame(
         [(1, "x", 1, "view")], "event_id long, ts string, user_id long, event_type string"
     )
-    with pytest.raises(TypeError, match="behavioral"):
-        behavioral.sessionize(df)
+    for op in (
+        behavioral.sessionize,
+        lambda d: joins.range_join_count(d, d, "event_id", "user_id", "ts"),
+    ):
+        with pytest.raises(TypeError, match="behavioral"):
+            op(df)
 
 
 def test_span_dup_stats_counts_positions(spark):

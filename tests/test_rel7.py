@@ -80,3 +80,42 @@ def test_cli_pipeline_counts_written_layers(spark, tmp_path, monkeypatch):
         f"{k}: {spark.read.parquet(str(out / k)).count()} rows" for k in layers
     ]
     assert printed[0] == "bronze: 24 rows"
+
+
+def test_cli_run_launches_no_extra_jobs(spark, monkeypatch):
+    """`python -m etl_pipeline_api_spark run` launches no more jobs than
+    one ``limit(n).collect()`` plus one ``count()`` of the same query: the
+    preview prints the rows already collected instead of running it again."""
+    import io
+    from contextlib import redirect_stdout
+
+    from etl_pipeline_api_spark import session
+    from etl_pipeline_api_spark.__main__ import _load_registry, main
+
+    sc = spark.sparkContext
+
+    def jobs_in(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def collect_and_count():
+        df = _load_registry()[0]["op-groupby-sum"](spark, SF)
+        df.limit(5).collect()
+        df.count()
+
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        cli = jobs_in(
+            "cli-run",
+            lambda: main(["run", "op-groupby-sum", "--sf", SF, "-n", "5"]),
+        )
+    want = jobs_in("collect-count", collect_and_count)
+    assert 0 < cli <= want
+    lines = buf.getvalue().splitlines()
+    assert len(lines) == 1 + 5 + 1  # header, the preview, the total
+    assert lines[-1].split(" rows total (")[1].startswith("5 shown)")
